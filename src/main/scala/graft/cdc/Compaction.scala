@@ -91,12 +91,10 @@ object Compaction {
     // find buckets holding expired tombstones (cheap scan of only the two
     // relevant columns — parquet column pruning keeps this tiny). Row LSNs
     // are non-negative, so a negative horizon (auto-compaction's -1 =
-    // "fragmentation only, GC nothing") can never match — skip even
-    // CONSTRUCTING the frame (reader setup lists every data file) rather
-    // than paying a per-maintenance-cycle listing for an unsatisfiable
-    // filter. The scan reads `snap`'s own buckets, not the current
-    // snapshot's, so every bucket id this run computes refers to one layout
-    // even if the table moves mid-run.
+    // "fragmentation only, GC nothing") can never match — skip the scan job
+    // for an unsatisfiable filter. The scan reads `snap`'s own buckets, not
+    // the current snapshot's, so every bucket id this run computes refers to
+    // one layout even if the table moves mid-run.
     val tombBuckets =
       if (horizonLsn < 0L || !snap.schema.fieldNames.contains(CdcModel.DeletedCol))
         Set.empty[Int]

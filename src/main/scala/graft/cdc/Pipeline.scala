@@ -389,7 +389,13 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
     * are split by LSN so any re-run partitions the stream identically —
     * the exactly-once replay property tests drive this.
     */
-  def replay(events: DataFrame, numBatches: Int, startBatchId: Long = 0L): Seq[MergeStats] = {
+  def replay(events: DataFrame, numBatches: Int, startBatchId: Long = 0L): Seq[MergeStats] =
+    replay(events, numBatches, startBatchId, CdcPipeline.PrecomputeBound)
+
+  /** [[replay]] with the slice-precompute bound as a parameter, so a test
+    * can drive the above-bound path at small scale. */
+  private[cdc] def replay(events: DataFrame, numBatches: Int, startBatchId: Long,
+      precomputeBound: Long): Seq[MergeStats] = {
     val bounds = events.agg(min(col(CdcModel.LsnCol)), max(col(CdcModel.LsnCol))).collect()(0)
     if (bounds.isNullAt(0)) return Nil
     val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
@@ -402,40 +408,36 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
     // watermark below the slice) and falls back to its own pre-pass when it
     // cannot trust a slice — so a resumed replay over a table whose
     // watermark straddles a slice stays exact. The collect is bounded at
-    // numBatches × numBuckets rows; skip the precompute (old behavior) when
-    // that bound is driver-hostile.
-    val preBySlice: Map[Long, Seq[(Int, Long, Long, Long)]] = {
-      val snap = if (mergeOnRead) None else table.currentSnapshot
-      snap match {
-        case Some(s) if numBatches.toLong * s.numBuckets <= 1000000L =>
-          val keys = CdcPipeline.effectiveKeys(s)
-          LakeTable.withBucket(events, keys, s.numBuckets)
-            // integer `div`, NOT `/` (double division truncates above 2^53
-            // and can round a slice-boundary LSN into the next slice)
-            .groupBy(expr(s"(cast(${CdcModel.LsnCol} as bigint) - ${lo}L) div ${width}L")
-              .as("_slice"), col(LakeTable.BucketCol))
-            .agg(count(lit(1)).as("n"), min(col(CdcModel.LsnCol)).as("mn"),
-              max(col(CdcModel.LsnCol)).as("mx"))
-            .collect().toSeq
-            .groupBy(_.getLong(0))
-            .map { case (sl, rows) =>
-              sl -> rows.map(r => (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-            }
-        case _ => Map.empty
+    // numBatches × numBuckets rows; above `precomputeBound` there are NO
+    // precomputed stats (None), and every batch runs its own pre-pass — an
+    // empty record here would be trusted as "this slice touches nothing"
+    // and commit the batch as empty. One snapshot read is the basis of both
+    // the stats and the layout they are checked against.
+    val basis = if (mergeOnRead) None else table.currentSnapshot
+    val preBySlice: Option[Map[Long, Seq[(Int, Long, Long, Long)]]] =
+      basis.filter(s => numBatches.toLong * s.numBuckets <= precomputeBound).map { s =>
+        val keys = CdcPipeline.effectiveKeys(s)
+        LakeTable.withBucket(events, keys, s.numBuckets)
+          // integer `div`, NOT `/` (double division truncates above 2^53
+          // and can round a slice-boundary LSN into the next slice)
+          .groupBy(expr(s"(cast(${CdcModel.LsnCol} as bigint) - ${lo}L) div ${width}L")
+            .as("_slice"), col(LakeTable.BucketCol))
+          .agg(count(lit(1)).as("n"), min(col(CdcModel.LsnCol)).as("mn"),
+            max(col(CdcModel.LsnCol)).as("mx"))
+          .collect().toSeq
+          .groupBy(_.getLong(0))
+          .map { case (sl, rows) =>
+            sl -> rows.map(r => (r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+          }
       }
-    }
-    val preBasis = table.currentSnapshot
     (0 until numBatches).map { i =>
       val (b0, b1) = (lo + i * width, lo + (i + 1) * width)
       val slice = events.filter(col(CdcModel.LsnCol) >= b0 && col(CdcModel.LsnCol) < b1)
       // LSN-range slices ascend, so ordered delivery holds and the watermark
       // fast-path may skip already-applied prefixes on re-runs; empty slices
       // still commit (fencing epoch advances uniformly)
-      val pre =
-        if (mergeOnRead || preBasis.isEmpty) None
-        else Some(Merge.PreStats(preBasis.get.numBuckets,
-          CdcPipeline.effectiveKeys(preBasis.get),
-          preBySlice.getOrElse(i.toLong, Nil)))
+      val pre = for (s <- basis; m <- preBySlice) yield Merge.PreStats(s.numBuckets,
+        CdcPipeline.effectiveKeys(s), m.getOrElse(i.toLong, Nil))
       applyBatch(slice, startBatchId + i, Map("replay" -> (b1 - 1)),
         orderedDelivery = true, preStats = pre)
     }
@@ -447,6 +449,10 @@ final class CdcPipeline(val table: LakeTable, val appId: String,
 }
 
 object CdcPipeline {
+  /** Largest numBatches × numBuckets for which [[CdcPipeline.replay]]
+    * precomputes every slice's pre-pass stats (rows collected to the driver). */
+  private[cdc] val PrecomputeBound: Long = 1000000L
+
   /** Resolve LWW across file generations: one surviving row per key, ordered
     * by (_lsn, _deleted, content) — deterministic under duplicate appends
     * (a replayed event re-appended by a new batchId carries identical
@@ -475,10 +481,7 @@ object CdcPipeline {
     * (pass `table.snapshot(v)` for a retained older version). */
   def resolved(table: LakeTable, snap: Snapshot): DataFrame = {
     val allBuckets = snap.files.map(_.bucket).toSet
-    // column probe via the SNAPSHOT schema (readBuckets reads with exactly
-    // it) — constructing the all-buckets frame first would resolve a
-    // FileIndex over every data file and then be DISCARDED on the windowed
-    // branch: a full O(#files) driver metadata pass per read, for nothing
+    // column probe via the SNAPSHOT schema, which readBuckets reads with
     if (!snap.schema.fieldNames.contains(CdcModel.RowLsnCol))
       return table.readBuckets(snap, allBuckets)
     val byBucket = snap.files.groupBy(_.bucket)
@@ -517,11 +520,13 @@ object CdcPipeline {
     * bucket that key hashes to ([[graft.lake.LakeTable.bucketOf]]) —
     * O(table/numBuckets) IO where [[liveState]] scans the table, which is
     * what makes "current state of repo X path Y" answerable in near-constant
-    * time on a 100 TB table. The key-equality filter is applied BEFORE the
-    * LWW window, so even a fragmented bucket resolves only this key's
+    * time on a 100 TB table. The key-equality filter is applied BEFORE
+    * resolution, so even a fragmented bucket resolves only this key's
     * generations (and parquet predicate pushdown skips non-matching row
-    * groups inside the bucket's files); single-generation buckets skip the
-    * window entirely, same as [[resolved]]. Requires the FULL key — the
+    * groups inside the bucket's files). The filter leaves ONE key, so the
+    * LWW winner is a top-1 sort by [[CdcModel.lwwOrder]] — one job, no
+    * shuffle by key and no window; single-generation buckets skip even
+    * that, same as [[resolved]]. Requires the FULL key — the
     * bucket hash covers every key column, so a partial key cannot prune
     * (use `liveState(table).filter(...)` for partial-key scans).
     * Deleted keys return an empty frame (the tombstone is the live state).
@@ -547,9 +552,11 @@ object CdcPipeline {
       d.filter(col(k) === lit(keyValues(k)).cast(schema(schema.fieldIndex(k)).dataType))
     }
     val multiGen = snap.files.count(_.bucket == bucket) > 1
+    // the winner is chosen BEFORE the tombstone filter: a deleted key's
+    // tombstone wins and is then filtered out, never an older live version
     (bucket, liveStateOf(
       if (!df.columns.contains(CdcModel.RowLsnCol) || !multiGen) keyed
-      else lwwResolve(keyed, keys)))
+      else keyed.orderBy(CdcModel.lwwOrder(keyed): _*).limit(1)))
   }
 
   /** The key columns a snapshot's buckets hash: the RECORDED key (round-3+

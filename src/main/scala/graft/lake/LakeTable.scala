@@ -6,8 +6,10 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructType, DataType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.json4s.jackson.Serialization
@@ -409,14 +411,26 @@ final class LakeTable(val root: String, spark: SparkSession) {
     row.getInt(2 * keyCols.length)
   }
 
-  private def readFiles(s: Snapshot, files: List[DataFile]): DataFrame = {
-    val schema = s.schema
-    if (files.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    } else {
-      spark.read.schema(schema).parquet(files.map(f => new HPath(dataDir, f.path).toString): _*)
-    }
-  }
+  /** A parquet scan over exactly `files`, planned from their manifest
+    * entries ([[ManifestFileIndex]]): no filesystem call and no listing job.
+    * Columns are read nullable (Spark's file-source rule), so a column added
+    * by schema evolution reads as null in older files. A data file that has
+    * gone missing fails the read naming it, whatever the session's
+    * `ignoreMissingFiles`: skipping it would silently drop committed rows.
+    * No files (the merge-on-read merge's target side, an empty append
+    * range) reads as an empty frame with no scan, so no reader set-up. */
+  private def readFiles(s: Snapshot, files: List[DataFile]): DataFrame =
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema)
+    else spark.baseRelationToDataFrame(HadoopFsRelation(
+      new ManifestFileIndex(qualifiedDataDir, files),
+      partitionSchema = new StructType(),
+      dataSchema = asNullable(s.schema).asInstanceOf[StructType],
+      bucketSpec = None,
+      fileFormat = new ParquetFileFormat(),
+      options = Map("ignoreMissingFiles" -> "false"))(spark))
+
+  private lazy val qualifiedDataDir: HPath = fs.makeQualified(dataDir)
 
   /** Write `df`'s rows as new immutable data files, one group per key bucket.
     * `df` must already contain an integer `_bucket` column; rows are hash
@@ -868,6 +882,15 @@ object LakeTable {
 
   def withBucket(df: DataFrame, keyCols: Seq[String], numBuckets: Int): DataFrame =
     df.withColumn(BucketCol, bucketExpr(keyCols, numBuckets))
+
+  private def asNullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asNullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asNullable(m.keyType), asNullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** Read a small metadata file fully as UTF-8. */
   private[graft] def readString(fs: FileSystem, p: HPath): String = {

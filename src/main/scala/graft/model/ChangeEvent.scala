@@ -57,23 +57,28 @@ object CdcModel {
       org.apache.spark.sql.types.StringType)
   }
 
-  /** THE LWW resolution window: one surviving row per key by
-    * (`_lsn` desc, tombstone desc, [[lwwTieBreak]] desc) over a frame that
-    * holds whole buckets. The single definition of the cross-generation
-    * total order — the generation-resolving read path
-    * ([[graft.cdc.CdcPipeline]]), [[graft.cdc.Compaction]]'s fold, and
-    * [[graft.lake.LakeTable.rebucket]]'s fold all run THIS function, so
-    * reads and maintenance can never diverge on a tie-break. */
-  def lwwResolve(df: org.apache.spark.sql.DataFrame,
-      keys: Seq[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, row_number}
-    val tie = lwwTieBreak(df.columns.toIndexedSeq)
+  /** THE cross-generation total order among stored rows of one key, winner
+    * first: (`_lsn` desc, tombstone desc, [[lwwTieBreak]] desc). The single
+    * definition — [[lwwResolve]]'s window and the point lookup's top-1
+    * ([[graft.cdc.CdcPipeline.lookupAt]]) both sort by THIS, so the two can
+    * never pick different winners on a tie-break. */
+  def lwwOrder(df: DataFrame): Seq[org.apache.spark.sql.Column] = {
     val del =
       if (df.columns.contains(DeletedCol)) coalesce(col(DeletedCol), lit(false))
       else lit(false)
+    Seq(col(RowLsnCol).desc, del.cast("int").desc,
+      lwwTieBreak(df.columns.toIndexedSeq).desc)
+  }
+
+  /** THE LWW resolution window: one surviving row per key by [[lwwOrder]]
+    * over a frame that holds whole buckets. The generation-resolving read
+    * path ([[graft.cdc.CdcPipeline]]), [[graft.cdc.Compaction]]'s fold, and
+    * [[graft.lake.LakeTable.rebucket]]'s fold all run THIS function, so
+    * reads and maintenance can never diverge on a tie-break. */
+  def lwwResolve(df: DataFrame, keys: Seq[String]): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(keys.map(col): _*)
-      .orderBy(col(RowLsnCol).desc, del.cast("int").desc, tie.desc)
+      .orderBy(lwwOrder(df): _*)
     df.withColumn("_gen_rn", row_number().over(w))
       .filter(col("_gen_rn") === 1).drop("_gen_rn")
   }

@@ -569,6 +569,37 @@ class CdcPipelineSpec extends SparkSuite {
       CdcPipeline.lookup(p.table, Map("repo" -> victim.getString(0)))
     }
     assert(e.getMessage.contains("EVERY key column"))
+    // same-LSN ties ACROSS generations resolve exactly as liveState does:
+    // equal LSN with greater content wins, with lesser content loses, and a
+    // delete beats a write at the same LSN — whichever generation holds it
+    val stored = CdcPipeline.resolved(p.table)
+      .filter(!coalesce(col(CdcModel.DeletedCol), lit(false)))
+      .orderBy("repo", "path", "commit").limit(3).collect()
+    assert(stored.length === 3)
+    def tie(r: org.apache.spark.sql.Row, op: String, content: String) =
+      (r.getAs[Long](CdcModel.RowLsnCol), op, r.getAs[String]("repo"), r.getAs[String]("path"),
+        r.getAs[String]("commit"), r.getAs[String]("lang"), content,
+        java.sql.Timestamp.valueOf("2024-01-01 00:00:00"))
+    val (higher, lower, deleted) = (stored(0), stored(1), stored(2))
+    p.applyBatch(Seq(
+        tie(higher, "U", higher.getAs[String]("content") + "~zz"),
+        tie(lower, "U", ""),
+        tie(deleted, "D", ""))
+      .toDF("lsn", "op", "repo", "path", "commit", "lang", "content", "eventTime"),
+      batchId = 3)
+    val tieSnap = p.table.currentSnapshot.get
+    for ((r, want) <- Seq(higher -> Some(higher.getAs[String]("content") + "~zz"),
+        lower -> Some(lower.getAs[String]("content")), deleted -> None)) {
+      val key = Map[String, Any](Seq("repo", "path", "commit").map(c => c -> r.getAs[String](c)): _*)
+      assert(tieSnap.files.count(_.bucket ==
+        p.table.bucketOf(tieSnap, tieSnap.keyCols, key)) > 1)
+      val got = CdcPipeline.lookup(p.table, key)
+      val fromLive = key.foldLeft(p.state()) { case (d, (c, v)) => d.filter(col(c) === v) }
+      assert(got.select("content").collect().map(_.getString(0)).toSeq === want.toSeq,
+        s"lookup($key) picked the wrong same-LSN winner")
+      assert(got.exceptAll(fromLive).count() === 0 && fromLive.exceptAll(got).count() === 0,
+        s"lookup($key) must equal liveState filtered to the key")
+    }
     live.unpersist()
   }
 

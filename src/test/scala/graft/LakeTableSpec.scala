@@ -21,6 +21,54 @@ class LakeTableSpec extends SparkSuite {
     assert(t.latestVersion === 1)
   }
 
+  test("scan planning: a read over >32 files starts no job and scans exactly the snapshot's files") {
+    val root = SparkTestBase.tmpDir("lake-plan")
+    val t = LakeTable(root)(spark)
+    t.create(schema, numBuckets = 48, appId = "t")
+    val snap = t.overwrite(
+      spark.range(2000).select(concat(lit("k"), col("id")).as("k"), col("id").as("v")),
+      Seq("k"), "t")
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32), where
+    // a path-based parquet read lists the files with a distributed job
+    assert(snap.files.size > 32, s"need > 32 data files, got ${snap.files.size}")
+    var df: org.apache.spark.sql.DataFrame = null
+    var inputFiles: Array[String] = null
+    val jobs = SparkTestBase.jobsStartedBy {
+      df = t.read()
+      inputFiles = df.inputFiles
+      df.queryExecution.executedPlan
+    }
+    assert(jobs === 0, "building a lake read must not run a Spark job")
+    val dataDir = new org.apache.hadoop.fs.Path(root, "data").toUri.getPath
+    assert(inputFiles.length === snap.files.size)
+    assert(inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName).toSet ===
+      snap.files.map(_.path).toSet)
+    assert(inputFiles.forall(f =>
+      new org.apache.hadoop.fs.Path(f).getParent.toUri.getPath == dataDir), inputFiles.head)
+    assert(df.count() === 2000)
+  }
+
+  test("a removed data file fails the read naming it, whatever ignoreMissingFiles says") {
+    val t = LakeTable(SparkTestBase.tmpDir("lake-missing"))(spark)
+    t.create(schema, numBuckets = 4, appId = "t")
+    val snap = t.overwrite(
+      spark.range(100).select(concat(lit("k"), col("id")).as("k"), col("id").as("v")),
+      Seq("k"), "t")
+    val victim = snap.files.head.path
+    java.nio.file.Files.delete(java.nio.file.Paths.get(t.root, "data", victim))
+    val key = "spark.sql.files.ignoreMissingFiles"
+    val before = spark.conf.getOption(key)
+    try {
+      for (v <- Seq("true", "false")) {
+        spark.conf.set(key, v)
+        val e = intercept[Exception] { t.read().collect() }
+        val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(x => String.valueOf(x.getMessage)).mkString("\n")
+        assert(messages.contains(victim), s"ignoreMissingFiles=$v: failure must name $victim")
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("commit CAS rejects stale parent (concurrent writers)") {
     val t = LakeTable(SparkTestBase.tmpDir("lake-cas"))(spark)
     val s0 = t.create(schema, 4, "t")

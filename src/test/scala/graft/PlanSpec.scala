@@ -248,6 +248,30 @@ class PlanSpec extends SparkSuite {
       s"single-generation lookup must be scan+filter only:\n$plan")
   }
 
+  test("multi-generation point lookup: a top-1 sort in one job, no Exchange and no Window") {
+    val ev = DerivedEvents.fromDocuments(spark.read.parquet(s"$sfDir/documents.parquet"))
+    val p = new CdcPipeline(LakeTable(SparkTestBase.tmpDir("plan-lookup-mor"))(spark),
+      "planlkmor", lineage = false, mergeOnRead = true, compactEveryFiles = 0)
+    p.bootstrap(numBuckets = 4)
+    p.applyBatch(ev, 0)
+    p.applyBatch(ev.withColumn("lsn", col("lsn") + 1000000L)
+      .withColumn("content", concat(lit("v2-"), col("content"))), 1)
+    val snap = p.table.currentSnapshot.get
+    val key = p.state().orderBy("repo", "path", "commit").head()
+    val kv = Map[String, Any](
+      "repo" -> key.getString(0), "path" -> key.getString(1), "commit" -> key.getString(2))
+    assert(snap.files.count(_.bucket == p.table.bucketOf(snap, snap.keyCols, kv)) > 1,
+      "the key's bucket must hold several generations")
+    val df = CdcPipeline.lookup(p.table, kv)
+    var rows: Array[org.apache.spark.sql.Row] = null
+    assert(SparkTestBase.jobsStartedBy { rows = df.collect() } === 1,
+      "a lookup must resolve its key's generations in one job")
+    assert(rows.length === 1 && rows(0).getAs[String]("content") === key.getAs[String]("content"))
+    val plan = planOf(df)
+    assert(!plan.contains("Exchange") && !"\\bWindow \\[".r.findFirstIn(plan).isDefined,
+      s"multi-generation lookup must not shuffle or window:\n$plan")
+  }
+
   test("dedup operators never build a cartesian product") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet").limit(100)
     val p1 = planOf(graft.operators.DedupOps.ngramJaccardPairs(docs, 3, 0.5))

@@ -21,6 +21,34 @@ object SparkTestBase {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Number of Spark jobs `body` starts on this thread, counted by a
+    * listener on the job group it runs under. Listener events arrive
+    * asynchronously but in order, so a marker job run afterwards is awaited
+    * before counting: once its start is seen, every earlier start is too. */
+  def jobsStartedBy(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val marker = s"marker-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      require(seen.contains(marker), "listener never saw the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 abstract class SparkSuite extends AnyFunSuite {
